@@ -1,0 +1,23 @@
+package graftbench
+
+/** Minimal JSON rendering for the harness's result and trace files. */
+private[graftbench] object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def num(d: Double): String = if (d.isNaN || d.isInfinite) "null" else d.toString
+
+  def obj(kv: Iterable[(String, String)]): String =
+    kv.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
+
+  def arr(xs: Iterable[String]): String = xs.mkString("[", ",", "]")
+
+  def nums(m: Iterable[(String, Double)]): String = obj(m.map { case (k, v) => k -> num(v) })
+}
